@@ -27,9 +27,10 @@ layout_mod = importlib.import_module("poc_parquet_publisher_spark.pipeline.layou
 # Declared queries checked and timed on every run: a count, a scan with
 # filter pushdown, aggregation, a multiway and an anti join, two kinds of
 # window, JSON extraction and exact percentiles, each loading its tables
-# through the catalog. A round of the timed loop is one write cycle then
-# these queries in seeded order (~9 s), so every query is timed on every
-# run. Checking all 49 declared queries cold would take ~50 s per run.
+# through the catalog. A round of the timed loop is these queries in seeded
+# order with a write cycle before each half (~10 s), so every query is
+# timed on every run and the write rate has ~6 cycles in a 30 s run to
+# take a median over. Checking all 49 declared queries cold would take ~50 s per run.
 QUERIES = (
     "q01_count",
     "q04_filter",
@@ -95,8 +96,6 @@ class Lake:
         self.errors: list[str] = []
         self.writes: list[dict] = []
         self.traced_latency: dict[str, list[float]] = {q: [] for q in QUERIES}
-        self.write_s = 0.0
-        self.rows_written = 0
         self._plan: list[str] = []
 
     def prepare(self) -> None:
@@ -151,12 +150,13 @@ class Lake:
 
     def _next_op(self) -> str:
         if not self._plan:
-            self._plan = ["write"] + [
-                str(q) for q in self.rng.permutation(QUERIES)
-            ]
+            order = [str(q) for q in self.rng.permutation(QUERIES)]
+            half = len(order) // 2
+            self._plan = ["write", *order[:half], "write", *order[half:]]
         return self._plan.pop(0)
 
-    def _write_cycle(self, timed: bool) -> None:
+    def _write_cycle(self, timed: bool) -> float:
+        """One sized write then its compaction; returns their seconds."""
         out = os.path.join(self.work_dir, f"records-{len(self.writes)}")
         t0 = time.perf_counter()
         with self.tracer.span("generate.write_sized_parquet"):
@@ -181,23 +181,18 @@ class Lake:
              "bytes_out": _tree_bytes(out),
              "traced": timed and self.tracer.enabled}
         )
-        if timed and not self.tracer.enabled:
-            self.write_s += write_s + compact_s
-            self.rows_written += n
+        return write_s + compact_s
 
     def step(self, traced: bool) -> dict:
         op = self._next_op()
         if op == "write":
-            self._write_cycle(timed=True)
-            return {"latencies": [], "rows": self.writes[-1]["rows"]}
+            cycle_s = self._write_cycle(timed=True)
+            return {"latencies": [],
+                    "op": ("write", cycle_s, self.writes[-1]["rows"])}
         latency = self._run_query(self.spark, op)
         if traced:
             self.traced_latency[op].append(latency)
-        return {"latencies": [(op, latency)], "rows": 0}
-
-    def rows_per_s(self, rows: int, wall_s: float) -> float:
-        """Records written per second of untraced write-cycle time."""
-        return self.rows_written / self.write_s if self.write_s else 0.0
+        return {"latencies": [(op, latency)], "op": (op, latency, 0)}
 
     def check(self) -> list[str]:
         errors = list(self.errors)

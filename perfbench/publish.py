@@ -204,7 +204,10 @@ class WideRequests(_Traffic):
                     "overwrite"
                 ).save()
         kind = f"request-{len(files)}-files"
-        return {"latencies": [(kind, latency)], "rows": published}
+        return {
+            "latencies": [(kind, latency)],
+            "op": (kind, latency, published),
+        }
 
     def layer_metrics(self) -> dict:
         t = self.tracer
@@ -279,8 +282,10 @@ class StreamDrains(_Traffic):
             box["query"], rows = self._drain(self.spark, self.src, factory)
             return rows
 
+        t0 = time.perf_counter()
         with self.tracer.span("drain"):
             rows = self._publish(traced, fault, send)
+        drain_s = time.perf_counter() - t0
         self.expected[traced].add(self.drain_expected)
         if rows != self.drain_expected["entries"]:
             self.errors.append(
@@ -294,7 +299,7 @@ class StreamDrains(_Traffic):
         if traced:
             self.progress.extend(progress)
         latencies = [("batch", p["triggerExecution"] / 1000.0) for p in progress]
-        return {"latencies": latencies, "rows": rows}
+        return {"latencies": latencies, "op": ("drain", drain_s, rows)}
 
     def layer_metrics(self) -> dict:
         return {
@@ -345,10 +350,6 @@ class Publish:
                 str(k) for k in self.rng.permutation(["request"] * 4 + ["drain"])
             ]
         return self.traffic[self._plan.pop()].step(traced)
-
-    def rows_per_s(self, rows: int, wall_s: float) -> float:
-        """Messages published per second of the timed loop."""
-        return rows / wall_s
 
     def check(self) -> list[str]:
         return [e for t in self.traffic.values() for e in t.check()]

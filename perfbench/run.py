@@ -24,12 +24,20 @@ ended. A run
 
 With ``--trace 0`` the metrics are ``END_TO_END``, measured on the
 untraced loop; with ``--trace 1`` they are ``PER_LAYER``, measured on the
-traced loop, and ``trace.overhead_ratio`` is the traced loop's median
-latency over the untraced loop's. Spans are written to
+traced loop, and ``trace.overhead_ratio`` is the traced loop's
+``latency_gmean_s`` over the untraced loop's. Spans are written to
 ``.perfbench-traces/`` in the checkout.
 
-``latency_p50_s`` is the median over operation kinds of each kind's median
-latency: requests, micro-batches, or each declared query.
+``latency_gmean_s`` is the geometric mean over operation kinds of each
+kind's median latency (kinds: request sizes and micro-batches, or each
+declared query), so every kind weighs the same whatever its scale.
+``peak_rss_mb`` is the median over the timed operations of each one's
+peak resident memory of the process tree (driver, JVM, Python workers).
+``rows_per_s`` is the rate of one round of the mix from per-kind medians
+(see ``round_rate``): messages published, or Records written and compacted.
+The driver JVM gets a fixed heap of ``DRIVER_MEMORY``, touched at start,
+so the JVM heap's share of ``peak_rss_mb`` is constant and the metric moves
+with the Python workers' and the JVM's off-heap memory.
 
 The exit code is non-zero when any correctness check fails.
 """
@@ -42,6 +50,7 @@ import dataclasses
 import json
 import os
 import shutil
+import signal
 import statistics
 import sys
 import tempfile
@@ -50,10 +59,11 @@ import traceback
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SETUP_CYCLES = 3
+DRIVER_MEMORY = "1g"
 
 END_TO_END = {
     "setup_s": "s",
-    "latency_p50_s": "s",
+    "latency_gmean_s": "s",
     "rows_per_s": "1/s",
     "peak_rss_mb": "MB",
 }
@@ -140,35 +150,61 @@ def _isolate(work: str) -> dict[str, str]:
         f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData" + (f" {opts}" if opts else "")
     )
     return {
+        # a fixed, pre-touched heap: G1 otherwise grows and shrinks the
+        # default quarter-of-RAM heap by GC timing, and the process tree's
+        # resident memory would follow that rather than the workload
+        "spark.driver.memory": DRIVER_MEMORY,
+        "spark.driver.extraJavaOptions":
+            f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         "spark.ui.showConsoleProgress": "false",
     }
 
 
-def p50(samples: list[tuple[str, float]]) -> float:
-    """Median over operation kinds of each kind's median latency, so a
-    loop cut by the deadline mid-round still weighs every kind once."""
+def latency_gmean(samples: list[tuple[str, float]]) -> float:
+    """Geometric mean over operation kinds of each kind's median latency,
+    so a loop cut by the deadline mid-round still weighs every kind once."""
     by_kind: dict[str, list[float]] = {}
     for kind, value in samples:
         by_kind.setdefault(kind, []).append(value)
     if not by_kind:
         return float("nan")
-    return statistics.median(statistics.median(v) for v in by_kind.values())
+    return statistics.geometric_mean(
+        statistics.median(v) for v in by_kind.values()
+    )
+
+
+def round_rate(ops: list[tuple[str, float, int]]) -> float:
+    """Rows per second of one round of the workload's mix: the sum over
+    the operation kinds that move rows of each kind's median rows over
+    the sum of their median seconds. Medians keep a stalled operation out;
+    summing by kind keeps a round cut by the deadline from changing the
+    mix."""
+    by_kind: dict[str, tuple[list[float], list[int]]] = {}
+    for kind, seconds, rows in ops:
+        if rows:
+            secs, counts = by_kind.setdefault(kind, ([], []))
+            secs.append(seconds)
+            counts.append(rows)
+    if not by_kind:
+        return float("nan")
+    rows = sum(statistics.median(c) for _, c in by_kind.values())
+    return rows / sum(statistics.median(s) for s, _ in by_kind.values())
 
 
 @dataclasses.dataclass
 class Loop:
     samples: list[tuple[str, float]]
+    ops: list[tuple[str, float, int]]
     attempted: int
     failed: int
-    rows: int
     wall: float
 
 
-def _loop(wl, tracer, seconds: float, traced: bool) -> Loop:
+def _loop(wl, tracer, seconds: float, traced: bool, rss=None) -> Loop:
     """Closed loop: the next operation starts when the previous one ended,
-    until ``seconds`` have passed."""
-    loop = Loop([], 0, 0, 0, 0.0)
+    until ``seconds`` have passed. ``rss`` gets a lap per operation."""
+    loop = Loop([], [], 0, 0, 0.0)
     tracer.enabled = traced
     start = time.perf_counter()
     try:
@@ -181,7 +217,9 @@ def _loop(wl, tracer, seconds: float, traced: bool) -> Loop:
                 traceback.print_exc()
                 continue
             loop.samples.extend(out["latencies"])
-            loop.rows += out["rows"]
+            loop.ops.append(out["op"])
+            if rss is not None:
+                rss.lap()
     finally:
         tracer.enabled = False
     loop.wall = time.perf_counter() - start
@@ -196,8 +234,10 @@ def _timed(fn) -> float:
 
 def run(workload: str, seed: int, seconds: float, trace: bool) -> dict:
     from poc_parquet_publisher_spark import session
+    from perfbench import procs
     from perfbench.trace import JobGroups, RssSampler, Tracer, jvm_gc_seconds
 
+    procs.adopt_orphans()
     load_before = os.getloadavg()[0]
     steal_before = _steal_s()
     work = os.path.join(ROOT, ".perfbench-work", f"{workload}-{seed}-{os.getpid()}")
@@ -233,7 +273,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> dict:
         # loop, so both kinds of run take equally long
         loop_s = seconds / 2 if trace else seconds
         with RssSampler() as rss:
-            plain = _loop(wl, tracer, loop_s, traced=False)
+            plain = _loop(wl, tracer, loop_s, traced=False, rss=rss)
         loops = [plain]
         if trace:
             tracer.jobs = JobGroups(spark)
@@ -247,10 +287,13 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> dict:
         checks_s += time.perf_counter() - t_chk
         _log(f"timed loop {plain.wall:.2f}s, {plain.attempted} ops; checked")
     finally:
-        if spark is not None:
-            spark.stop()
-        shutil.rmtree(work, ignore_errors=True)
-        _log("session stopped")
+        try:
+            if spark is not None:
+                spark.stop()
+        finally:
+            procs.stop_all()
+            shutil.rmtree(work, ignore_errors=True)
+            _log("session and JVM stopped")
 
     attempted = sum(lp.attempted for lp in loops)
     failed = sum(lp.failed for lp in loops)
@@ -261,9 +304,15 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> dict:
         f"samples: {len(plain.samples)} latencies from {plain.attempted} "
         f"ops in {plain.wall:.2f}s",
     ]
+    by_kind: dict[str, list[float]] = {}
+    for kind, seconds, _ in plain.ops:
+        by_kind.setdefault(kind, []).append(seconds)
     notes.append(
-        "latencies (s): "
-        + " ".join(f"{v:.3f}" for v in sorted(v for _, v in plain.samples))
+        "operation seconds: "
+        + "; ".join(
+            f"{kind} " + " ".join(f"{v:.3f}" for v in values)
+            for kind, values in sorted(by_kind.items())
+        )
     )
     notes += [f"check failed: {e}" for e in errors]
     if trace:
@@ -277,8 +326,9 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> dict:
                 "jvm.gc_s": gc_s,
                 "bench.inputs_s": inputs_s,
                 "bench.checks_s": checks_s,
-                "trace.overhead_ratio": p50(loops[1].samples) / p50(
-                    plain.samples
+                "trace.overhead_ratio": (
+                    latency_gmean(loops[1].samples)
+                    / latency_gmean(plain.samples)
                 ),
             }
         )
@@ -292,9 +342,9 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> dict:
     else:
         metrics = {
             "setup_s": statistics.median(b + w for b, w in cycles),
-            "latency_p50_s": p50(plain.samples),
-            "rows_per_s": wl.rows_per_s(plain.rows, plain.wall),
-            "peak_rss_mb": rss.peak / 1e6,
+            "latency_gmean_s": latency_gmean(plain.samples),
+            "rows_per_s": round_rate(plain.ops),
+            "peak_rss_mb": statistics.median(rss.laps) / 1e6,
         }
         units = END_TO_END
     return {
@@ -318,6 +368,8 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("--seconds", type=float, required=True)
     parser.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = parser.parse_args(argv)
+    # a terminated run still stops the processes it started
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     sys.path.insert(0, ROOT)
     if args.workload not in _workloads():
         parser.error(f"unknown workload {args.workload!r}")

@@ -86,18 +86,25 @@ def main() -> int:
     sys.path.insert(0, ROOT)
     from poc_parquet_publisher_spark import session
 
+    from perfbench import procs
     from perfbench.run import _isolate, _nproc
     from perfbench.trace import Tracer
 
+    procs.adopt_orphans()
     work = os.path.join(ROOT, ".perfbench-work", f"selftest-{os.getpid()}")
     conf = _isolate(work)
-    spark = session.build_session(master=f"local[{_nproc()}]", extra_conf=conf)
     try:
-        tracer = Tracer()
-        results = _publish_cases(spark, work, tracer)
-        results += _lake_cases(spark, work, tracer)
+        spark = session.build_session(
+            master=f"local[{_nproc()}]", extra_conf=conf
+        )
+        try:
+            tracer = Tracer()
+            results = _publish_cases(spark, work, tracer)
+            results += _lake_cases(spark, work, tracer)
+        finally:
+            spark.stop()
     finally:
-        spark.stop()
+        procs.stop_all()
         shutil.rmtree(work, ignore_errors=True)
     ok = True
     for name, passed in results:

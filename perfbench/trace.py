@@ -130,7 +130,7 @@ def jvm_gc_seconds(spark) -> float:
     return sum(max(0, b.getCollectionTime()) for b in beans) / 1000.0
 
 
-def _children_map() -> dict[int, list[int]]:
+def children_map() -> dict[int, list[int]]:
     out: dict[int, list[int]] = {}
     for entry in os.listdir("/proc"):
         if not entry.isdigit():
@@ -148,7 +148,7 @@ def _children_map() -> dict[int, list[int]]:
 def tree_rss_bytes(root: int) -> int:
     """Resident bytes of ``root`` and all its descendants (the driver, the
     JVM it launched and the JVM's Python workers)."""
-    children = _children_map()
+    children = children_map()
     page = os.sysconf("SC_PAGE_SIZE")
     total, todo = 0, [root]
     while todo:
@@ -163,19 +163,32 @@ def tree_rss_bytes(root: int) -> int:
 
 
 class RssSampler:
-    """Background sampler of the process tree's resident memory."""
+    """Background sampler of the process tree's resident memory. ``lap``
+    closes one operation's window and keeps its peak in ``laps``."""
 
-    def __init__(self, interval_s: float = 0.2):
+    def __init__(self, interval_s: float = 0.1):
         self.interval_s = interval_s
-        self.peak = 0
+        self.laps: list[int] = []
+        self._lap_peak = 0
+        self._lock = threading.Lock()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
+    def _sample(self) -> None:
+        rss = tree_rss_bytes(os.getpid())
+        with self._lock:
+            self._lap_peak = max(self._lap_peak, rss)
+
     def _run(self) -> None:
-        root = os.getpid()
         while not self._stop.is_set():
-            self.peak = max(self.peak, tree_rss_bytes(root))
+            self._sample()
             self._stop.wait(self.interval_s)
+
+    def lap(self) -> None:
+        self._sample()
+        with self._lock:
+            self.laps.append(self._lap_peak)
+            self._lap_peak = 0
 
     def __enter__(self):
         self._thread.start()
@@ -184,5 +197,5 @@ class RssSampler:
     def __exit__(self, *exc):
         self._stop.set()
         self._thread.join()
-        self.peak = max(self.peak, tree_rss_bytes(os.getpid()))
+        self._sample()
         return False
