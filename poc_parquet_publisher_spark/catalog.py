@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .session import _REQUIRED_RUNTIME_CONFS
+
 TABLES = (
     "region",
     "nation",
@@ -70,18 +72,14 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Runtime-settable SQL confs the engine depends on. The harness driver hands
-# us *its* SparkSession (entry/queries contract), which may not have been
-# built by session.build_session -- without nanosAsLong every events-table
-# read dies with PARQUET_TYPE_ILLEGAL, and without a pinned UTC zone the
-# nanos->NTZ conversion below would shift by the session zone offset.
-_REQUIRED_RUNTIME_CONFS = {
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.session.timeZone": "UTC",
-}
-
-
 def ensure_session_confs(spark: SparkSession) -> None:
+    """Apply the runtime-settable SQL confs the engine depends on
+    (session._REQUIRED_RUNTIME_CONFS). The harness driver hands us *its*
+    SparkSession (entry/queries contract), which may not have been built
+    by session.build_session -- without nanosAsLong every events-table
+    read dies with PARQUET_TYPE_ILLEGAL, and without a pinned UTC zone
+    the nanos->NTZ conversion below would shift by the session zone
+    offset."""
     for key, value in _REQUIRED_RUNTIME_CONFS.items():
         if spark.conf.get(key, None) != value:
             spark.conf.set(key, value)

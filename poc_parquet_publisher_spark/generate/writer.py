@@ -9,6 +9,10 @@ writes the computed row count in one distributed pass:
 - the 1 GB bound -> ``rows_for_target_bytes`` + one ``write.parquet``;
 - per-file size control -> ``maxRecordsPerFile`` so a 1000-executor run
   emits uniformly sized files instead of one giant one.
+
+The sample is measured through pipeline/layout.py ``_list_data_files``,
+the one listing of a Parquet tree (Hadoop FileSystem API, any scheme);
+this module holds no listing or tree-rewrite code of its own.
 """
 
 from __future__ import annotations
@@ -20,19 +24,11 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+from ..pipeline.layout import _list_data_files
 from .records import generate_records
 
 DEFAULT_TARGET_BYTES = 1 << 30  # main.go:19,87
 ROWS_PER_FLUSH = 10_000  # main.go:60
-
-
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith((".", "_")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
 
 
 def rows_for_target_bytes(
@@ -53,7 +49,8 @@ def rows_for_target_bytes(
         generate_records(spark, sample_rows).write.mode("overwrite").parquet(
             out
         )
-        bytes_per_row = _dir_bytes(out) / sample_rows
+        sample_bytes = sum(sz for _p, sz in _list_data_files(spark, out))
+        bytes_per_row = sample_bytes / sample_rows
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return max(1, math.ceil(target_bytes / bytes_per_row))

@@ -227,34 +227,21 @@ def _compact_index(
     keep: "F.Column | None" = None,
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict:
-    """Shared index-compaction core: read every generation file, drop
-    duplicate rows (crashed-retry re-appends are byte-identical by
-    determinism, so this cannot change probe answers), optionally keep
-    only rows matching ``keep``, and rewrite as ~target-sized files via
-    the durable staged swap (pipeline/layout.py staged_swap)."""
-    from ..pipeline.layout import _list_data_files, staged_swap
+    """Shared index-compaction transform: drop duplicate rows
+    (crashed-retry re-appends are byte-identical by determinism, so this
+    cannot change probe answers), optionally keep only rows matching
+    ``keep``; pipeline/layout.py ``_rewrite_tree`` lists, sizes and
+    swaps the rewrite in."""
+    from ..pipeline.layout import _rewrite_tree
 
-    files = _list_data_files(spark, index_path)
-    if not files:
-        raise ValueError(f"no index data files under {index_path}")
-    total_bytes = sum(sz for _p, sz in files)
-    idx = spark.read.parquet(index_path).dropDuplicates(dedup_cols)
-    if keep is not None:
-        idx = idx.filter(keep)
-    # pin before the swap: the plan reads the very path being rewritten
-    idx = idx.localCheckpoint()
-    n_rows = idx.count()
-    n_out = max(1, min(len(files), -(-total_bytes // target_file_bytes)))
+    def dedup(idx: DataFrame) -> DataFrame:
+        idx = idx.dropDuplicates(dedup_cols)
+        if keep is not None:
+            idx = idx.filter(keep)
+        # pin before the swap: the plan reads the very path being rewritten
+        return idx.localCheckpoint()
 
-    def _write(staging: str) -> None:
-        idx.repartition(n_out).write.mode("overwrite").parquet(staging)
-
-    staged_swap(spark, index_path, _write)
-    return {
-        "files_before": len(files),
-        "files_after": len(_list_data_files(spark, index_path)),
-        "rows": n_rows,
-    }
+    return _rewrite_tree(spark, index_path, target_file_bytes, dedup)
 
 
 def compact_neardup_index(
@@ -279,7 +266,7 @@ def compact_neardup_index(
     caught -- size the horizon to the staleness your corpus tolerates.
 
     Idempotent: re-running changes nothing (same rows, same file count).
-    Returns {files_before, files_after, rows}.
+    Returns {files_before, files_after, bytes, rows}.
     """
     keep = None if expire_before is None else F.col("doc") >= expire_before
     return _compact_index(

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import ensure_session_confs
+from .publish import _boto3_client_factory
 
 
 def resolve_paths(bucket: str | None, paths: list[str]) -> list[str]:
@@ -56,23 +57,9 @@ def s3_client_factory(
     (LocalStack/minio/moto) pairs an explicit endpoint with explicit
     creds, independent of the process environment.
     """
-
-    def make():
-        try:
-            import boto3
-        except ImportError as exc:  # pragma: no cover - no boto3 here
-            raise NotImplementedError(
-                "boto3 is not installed; staged reads need an S3 client"
-            ) from exc
-        return boto3.client(
-            "s3",
-            region_name=region,
-            endpoint_url=endpoint,
-            aws_access_key_id=access_key,
-            aws_secret_access_key=secret_key,
-        )
-
-    return make
+    return _boto3_client_factory(
+        "s3", region, endpoint, access_key, secret_key
+    )
 
 
 def read_request_staged(

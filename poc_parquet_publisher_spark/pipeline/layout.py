@@ -1,5 +1,6 @@
-"""Data layout management for parquet at scale: partitioned writes and
-small-file compaction.
+"""Data layout management for parquet at scale: partitioned writes,
+small-file compaction, and the one place Parquet trees are listed,
+measured and rewritten.
 
 The reference's only layout control is a size-bounded single file
 (cmd/create-test-data/main.go:57-91: flush every 10k rows, stop at
@@ -20,16 +21,24 @@ operations a production lake needs:
   partition, the standard maintenance pass after streaming/incremental
   ingestion leaves thousands of KB-sized files behind.
 
-Row-group sizing (the reference's flush interval) maps to
-``parquet.block.size``; per-file row bounds to ``maxRecordsPerFile``.
+Listing and sizing live only here: ``_list_data_files`` is the one
+listing of a tree (the generator's size probe, index compaction and
+the JSONL exporter all call it), ``_rewrite_tree`` is the one
+measure-then-rewrite core (``compact`` and ops/incremental.py's index
+compaction), and ``_write_tree`` is the one write step. Row-group
+sizing (the reference's flush interval) maps to ``parquet.block.size``;
+per-file row bounds to ``maxRecordsPerFile``.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .publish import serialize_json
 
 
 def _fs_for(spark: SparkSession, path: str):
@@ -43,8 +52,11 @@ def _fs_for(spark: SparkSession, path: str):
     return fs, jpath
 
 
-def _list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """Recursive (path, bytes) of parquet data files under a tree."""
+def _list_data_files(
+    spark: SparkSession, path: str, suffix: str = ".parquet"
+) -> list[tuple[str, int]]:
+    """Recursive (path, bytes) of the data files under a tree: every
+    non-hidden file ending in ``suffix`` (``""`` matches any name)."""
     fs, jpath = _fs_for(spark, path)
     if not fs.exists(jpath):
         return []
@@ -53,7 +65,7 @@ def _list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     while it.hasNext():
         status = it.next()
         name = status.getPath().getName()
-        if name.endswith(".parquet") and not name.startswith(("_", ".")):
+        if name.endswith(suffix) and not name.startswith(("_", ".")):
             out.append((status.getPath().toString(), status.getLen()))
     return out
 
@@ -81,6 +93,33 @@ def staged_swap(spark: SparkSession, path: str, write_to) -> None:
     fs.delete(jpath(backup), True)
 
 
+def _write_tree(
+    df: DataFrame,
+    path: str,
+    partition_cols: list[str] | None = None,
+    sort_cols: list[str] | None = None,
+    max_records_per_file: int | None = None,
+    n_files: int | None = None,
+    mode: str = "overwrite",
+) -> None:
+    """The one parquet write step: repartition (on the partition key, or
+    into ``n_files`` tasks), sort within tasks, optional ``partitionBy``
+    and ``maxRecordsPerFile``."""
+    partition_cols = partition_cols or []
+    if partition_cols:
+        out = df.repartition(*[F.col(c) for c in partition_cols])
+    else:
+        out = df.repartition(n_files)
+    if sort_cols:
+        out = out.sortWithinPartitions(*partition_cols, *sort_cols)
+    writer = out.write.mode(mode)
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    if max_records_per_file is not None:
+        writer = writer.option("maxRecordsPerFile", max_records_per_file)
+    writer.parquet(path)
+
+
 def write_partitioned(
     df: DataFrame,
     path: str,
@@ -103,13 +142,9 @@ def write_partitioned(
     """
     if not partition_cols:
         raise ValueError("partition_cols must be non-empty")
-    out = df.repartition(*[F.col(c) for c in partition_cols])
-    if sort_cols:
-        out = out.sortWithinPartitions(*partition_cols, *sort_cols)
-    writer = out.write.mode(mode).partitionBy(*partition_cols)
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(path)
+    _write_tree(
+        df, path, partition_cols, sort_cols, max_records_per_file, mode=mode
+    )
 
 
 def data_files(path: str, spark: SparkSession | None = None) -> list[str]:
@@ -121,6 +156,54 @@ def data_files(path: str, spark: SparkSession | None = None) -> list[str]:
     return [p for p, _sz in _list_data_files(spark, path)]
 
 
+def _rewrite_tree(
+    spark: SparkSession,
+    path: str,
+    target_file_bytes: int,
+    transform: Callable[[DataFrame], DataFrame] | None = None,
+    partition_cols: list[str] | None = None,
+    sort_cols: list[str] | None = None,
+) -> dict:
+    """List -> read -> optional ``transform`` -> count -> size -> write
+    -> swap: the one measure-then-rewrite core.
+
+    On-disk bytes and the row count are observed, not guessed (the
+    bytes-per-row trick behind the reference's 1 GB stop condition), and
+    set both the task count, never above the input file count, and
+    ``maxRecordsPerFile``. The count and the write each run the read
+    plan, so a costly ``transform`` pins its own result
+    (localCheckpoint) to run once.
+
+    Returns {files_before, files_after, bytes, rows}.
+    """
+    files = _list_data_files(spark, path)
+    if not files:
+        raise ValueError(f"no parquet data files under {path}")
+    total_bytes = sum(sz for _p, sz in files)
+    df = spark.read.parquet(path)
+    if transform is not None:
+        df = transform(df)
+    n_rows = df.count()
+    bytes_per_row = max(1.0, total_bytes / max(1, n_rows))
+    n_out = max(
+        1, min(len(files), math.ceil(total_bytes / target_file_bytes))
+    )
+    max_records = max(1, int(target_file_bytes / bytes_per_row))
+    staged_swap(
+        spark,
+        path,
+        lambda staging: _write_tree(
+            df, staging, partition_cols, sort_cols, max_records, n_out
+        ),
+    )
+    return {
+        "files_before": len(files),
+        "files_after": len(_list_data_files(spark, path)),
+        "bytes": total_bytes,
+        "rows": n_rows,
+    }
+
+
 def compact(
     spark: SparkSession,
     path: str,
@@ -130,12 +213,10 @@ def compact(
 ) -> dict:
     """Rewrite a parquet tree into ~``target_file_bytes`` files.
 
-    Reads the tree, measures on-disk bytes and row count (so the
-    compression ratio is observed, not guessed -- the same
-    bytes-per-row trick the generator uses for the reference's 1 GB
-    stop condition: cmd/create-test-data/main.go:57-91), and rewrites:
+    Reads the tree, measures on-disk bytes and row count, and rewrites:
 
-    - unpartitioned: ``repartition(ceil(bytes / target))``;
+    - unpartitioned: ``repartition(ceil(bytes / target))``, capped at
+      the input file count;
     - partitioned: one shuffle on the partition key keeps the hive
       layout, and ``maxRecordsPerFile`` (derived from observed
       bytes/row) bounds file size WITHIN each directory too.
@@ -150,49 +231,15 @@ def compact(
     ``._compact_old`` debris from a crashed run is cleared first, so
     compaction is re-runnable.
 
-    Returns {files_before, files_after, bytes}.
+    Returns {files_before, files_after, bytes, rows}.
     """
-    files = _list_data_files(spark, path)
-    if not files:
-        raise ValueError(f"no parquet data files under {path}")
-    total_bytes = sum(sz for _p, sz in files)
-    n_out = max(1, math.ceil(total_bytes / target_file_bytes))
-    df = spark.read.parquet(path)
-
-    n_rows = df.count()
-    bytes_per_row = max(1.0, total_bytes / max(1, n_rows))
-    max_records = max(1, int(target_file_bytes / bytes_per_row))
-
-    def _write(staging: str) -> None:
-        if partition_cols:
-            # keep the hive layout; one shuffle on the partition key
-            # bounds files per directory, maxRecordsPerFile bounds their
-            # size
-            out = df.repartition(*[F.col(c) for c in partition_cols])
-            if sort_cols:
-                out = out.sortWithinPartitions(*partition_cols, *sort_cols)
-            (
-                out.write.mode("overwrite")
-                .option("maxRecordsPerFile", max_records)
-                .partitionBy(*partition_cols)
-                .parquet(staging)
-            )
-        else:
-            out = df.repartition(n_out)
-            if sort_cols:
-                out = out.sortWithinPartitions(*sort_cols)
-            (
-                out.write.mode("overwrite")
-                .option("maxRecordsPerFile", max_records)
-                .parquet(staging)
-            )
-
-    staged_swap(spark, path, _write)
-    return {
-        "files_before": len(files),
-        "files_after": len(_list_data_files(spark, path)),
-        "bytes": total_bytes,
-    }
+    return _rewrite_tree(
+        spark,
+        path,
+        target_file_bytes,
+        partition_cols=partition_cols,
+        sort_cols=sort_cols,
+    )
 
 
 def export_jsonl(
@@ -203,31 +250,20 @@ def export_jsonl(
 ) -> int:
     """Export a corpus as JSON-Lines shards -- the interchange format
     every tokenizer/training loader ingests. One row per line via
-    ``to_json(struct(*))`` (the same serialization the publish leg uses,
-    pipeline/publish.py serialize_json), written with Spark's text sink
-    so shard count == task count and ``maxRecordsPerFile`` bounds shard
-    size -- the 100 TB posture: no driver-side iteration, no collect,
-    shards land in parallel on any Hadoop scheme (file:, hdfs:, s3a:).
+    pipeline/publish.py ``serialize_json`` (the publish leg's
+    serialization), written with Spark's text sink so shard count ==
+    task count and ``maxRecordsPerFile`` bounds shard size -- the
+    100 TB posture: no driver-side iteration, no collect, shards land
+    in parallel on any Hadoop scheme (file:, hdfs:, s3a:).
 
     Returns the number of shard files written. ``compression`` accepts
     the text-sink codecs ('gzip', 'snappy', ...) for wire-friendly
     shards.
     """
-    writer = (
-        df.select(F.to_json(F.struct(*df.columns)).alias("value"))
-        .write.mode("overwrite")
-    )
+    writer = serialize_json(df).write.mode("overwrite")
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     if compression:
         writer = writer.option("compression", compression)
     writer.text(path)
-    spark = df.sparkSession
-    fs, jpath = _fs_for(spark, path)
-    n = 0
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        name = it.next().getPath().getName()
-        if not name.startswith(("_", ".")):
-            n += 1
-    return n
+    return len(_list_data_files(df.sparkSession, path, suffix=""))

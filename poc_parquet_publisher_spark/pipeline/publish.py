@@ -87,6 +87,34 @@ class DirectoryQueue:
         return {"Successful": [{"Id": e["Id"]} for e in entries], "Failed": []}
 
 
+def _boto3_client_factory(
+    service: str,
+    region: str | None,
+    endpoint: str | None,
+    access_key: str | None,
+    secret_key: str | None,
+):
+    """Picklable zero-arg boto3 client factory for ``service``; without
+    boto3 the call raises NotImplementedError."""
+
+    def make():
+        try:
+            import boto3
+        except ImportError as exc:  # pragma: no cover - no boto3 here
+            raise NotImplementedError(
+                f"boto3 is not installed; a real {service} client needs it"
+            ) from exc
+        return boto3.client(
+            service,
+            region_name=region,
+            endpoint_url=endpoint,
+            aws_access_key_id=access_key,
+            aws_secret_access_key=secret_key,
+        )
+
+    return make
+
+
 def sqs_client_factory(
     region: str | None = None,
     endpoint: str | None = None,
@@ -101,23 +129,9 @@ def sqs_client_factory(
     deployment shape -- LocalStack/minio/moto -- always pairs an
     explicit endpoint with explicit static creds).
     """
-
-    def make():
-        try:
-            import boto3
-        except ImportError as exc:  # pragma: no cover - no boto3 here
-            raise NotImplementedError(
-                "boto3 is not installed; use DirectoryQueue for local runs"
-            ) from exc
-        return boto3.client(
-            "sqs",
-            region_name=region,
-            endpoint_url=endpoint,
-            aws_access_key_id=access_key,
-            aws_secret_access_key=secret_key,
-        )
-
-    return make
+    return _boto3_client_factory(
+        "sqs", region, endpoint, access_key, secret_key
+    )
 
 
 def _chunks(it: Iterable, size: int) -> Iterator[list]:
@@ -146,12 +160,13 @@ def publish(
     much as partition fan-out).
 
     Failure policy mirrors the reference's queue redrive
-    (template.yaml:6-16): a batch with Failed entries retries up to
-    ``max_attempts`` times (pass DEFAULT_MAX_ATTEMPTS for the reference's
-    maxReceiveCount=5); a batch that exhausts retries goes to the
-    dead-letter client when one is configured, otherwise raises -- failing
-    the Spark task, fail-fast like handler.go:219-229. Delivery is
-    at-least-once under retry, the same contract as SQS itself.
+    (template.yaml:6-16): a batch's Failed entries -- only those, the
+    rest were delivered -- retry up to ``max_attempts`` times (pass
+    DEFAULT_MAX_ATTEMPTS for the reference's maxReceiveCount=5); entries
+    that exhaust retries go to the dead-letter client when one is
+    configured, otherwise raise -- failing the Spark task, fail-fast like
+    handler.go:219-229. Delivery is at-least-once under task retry, the
+    same contract as SQS itself.
 
     Counts are driver-side accumulator totals -- a scan-free analog of the
     reference's publishedRows log (handler.go:231-239).
@@ -167,26 +182,27 @@ def publish(
 
         def send(indexed_chunk: tuple[int, list[str]]) -> tuple[int, int]:
             idx, chunk = indexed_chunk
-            entries = [
+            pending = [
                 {"Id": f"{base}-{idx * batch_size + j}", "MessageBody": body}
                 for j, body in enumerate(chunk)
             ]
-            n_failed = 0
             for attempt in range(max_attempts):
                 result = client.send_message_batch(
-                    QueueUrl=queue_url, Entries=entries
+                    QueueUrl=queue_url, Entries=pending
                 )
-                failed = result.get("Failed") or []
-                n_failed = len(failed)
-                if not failed:
-                    return len(entries), 0
+                # Failed names only the entries that failed; the rest
+                # were delivered and must not be sent again
+                failed = {f["Id"] for f in result.get("Failed") or []}
+                pending = [e for e in pending if e["Id"] in failed]
+                if not pending:
+                    return len(chunk), 0
                 if attempt + 1 < max_attempts:
                     time.sleep(retry_backoff_s * (attempt + 1))
             if dlq is not None:
-                dlq.send_message_batch(QueueUrl=dlq_url, Entries=entries)
-                return 0, len(entries)
+                dlq.send_message_batch(QueueUrl=dlq_url, Entries=pending)
+                return len(chunk) - len(pending), len(pending)
             raise RuntimeError(
-                f"failed to send {n_failed} messages in batch {idx} "
+                f"failed to send {len(pending)} messages in batch {idx} "
                 f"after {max_attempts} attempts"
             )
 

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .pipeline.layout import _fs_for
+
 
 def salted_join(
     big: DataFrame,
@@ -94,11 +96,7 @@ def write_bucketed(
         # this catalog. Drop both the entry and any stale directory.
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        loc = f"{warehouse.rstrip('/')}/{table.lower()}"
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(loc)
-        fs = p.getFileSystem(hconf)
+        fs, p = _fs_for(spark, f"{warehouse.rstrip('/')}/{table.lower()}")
         if fs.exists(p):
             fs.delete(p, True)
     # One file per bucket: without the repartition, EVERY writer task
@@ -304,13 +302,6 @@ def global_row_number(
         out_col,
         num_partitions,
     ).drop(tmp)
-
-
-# Hive-partitioned writes + small-file compaction live in
-# pipeline/layout.py (write_partitioned bounds file counts via a
-# partition-key repartition and sorts within tasks for row-group
-# stats); re-exported here for the original call sites.
-from .pipeline.layout import write_partitioned  # noqa: E402, F401
 
 
 def zorder_key(cols: list[str], bits: int = 8) -> F.Column:

@@ -23,10 +23,15 @@ from pyspark.sql import SparkSession
 # The driver fixtures store events.ts as Parquet TIMESTAMP(NANOS), which the
 # stock reader rejects ([PARQUET_TYPE_ILLEGAL]). nanosAsLong loads such
 # columns as raw nanosecond longs; catalog.load_table converts them to
-# TIMESTAMP_NTZ (micros) to match DuckDB's naive-timestamp read.
-_BASE_CONF: dict[str, str] = {
+# TIMESTAMP_NTZ (micros) to match DuckDB's naive-timestamp read, which the
+# pinned UTC zone keeps from shifting. Runtime-settable, so
+# catalog.ensure_session_confs also applies them to sessions built elsewhere.
+_REQUIRED_RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+_BASE_CONF: dict[str, str] = {
+    **_REQUIRED_RUNTIME_CONFS,
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

@@ -25,36 +25,22 @@ OUTPUT_SCHEMA = "event_type string, batch_rows long, running_total long"
 STATE_SCHEMA = "total long"
 
 
-def _advance_totals(
-    prev_total: int, pdfs: Iterator[pd.DataFrame]
-) -> tuple[int, int]:
-    """Shared counting core for BOTH stateful APIs (applyInPandasWithState
-    and its Spark 4 successor transformWithStateInPandas): fold this
-    batch's rows into the running total. One definition, so the two API
-    paths cannot drift."""
-    batch_rows = sum(len(pdf) for pdf in pdfs)
-    return batch_rows, prev_total + batch_rows
-
-
-def _totals_frame(key: tuple[Any, ...], batch_rows: int, total: int) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "event_type": [key[0]],
-            "batch_rows": [batch_rows],
-            "running_total": [total],
-        }
-    )
-
-
 def _update_totals(
     key: tuple[Any, ...],
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
     (prev,) = state.get if state.exists else (0,)
-    batch_rows, total = _advance_totals(prev, pdfs)
+    batch_rows = sum(len(pdf) for pdf in pdfs)
+    total = prev + batch_rows
     state.update((total,))
-    yield _totals_frame(key, batch_rows, total)
+    yield pd.DataFrame(
+        {
+            "event_type": [key[0]],
+            "batch_rows": [batch_rows],
+            "running_total": [total],
+        }
+    )
 
 
 def running_event_totals(
@@ -82,83 +68,6 @@ def running_event_totals(
             stateStructType=STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def has_transform_with_state() -> bool:
-    """Live probe for the Spark 4 transformWithStateInPandas runtime
-    dependency: the API's state-server protocol needs ``google.protobuf``
-    on the Python side (absent in this container -- SURVEY.md section
-    2.3). ``running_event_totals_tws`` activates the day it appears;
-    until then callers (and the conditional test) skip with a reason.
-    Also requires the API itself (pyspark >= 4.0 exposes
-    ``GroupedData.transformWithStateInPandas``) -- protobuf alone on an
-    older pyspark must not pass the probe."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        return False
-    from pyspark.sql.group import GroupedData
-
-    return hasattr(GroupedData, "transformWithStateInPandas")
-
-
-def running_event_totals_tws(
-    stream: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """``running_event_totals`` on the Spark 4 successor API
-    (``transformWithStateInPandas``): identical output contract, the
-    counting core shared via ``_advance_totals``, state held in a named
-    ValueState on the StatefulProcessorHandle instead of the single
-    implicit GroupState. Raises ImportError with a clear message when
-    ``google.protobuf`` is unavailable (see ``has_transform_with_state``).
-
-    The successor API's wins at scale: multiple independent state
-    variables per key (value/list/map), native TTL per state variable,
-    and timers decoupled from state -- the shape to migrate to once the
-    runtime dependency is present everywhere.
-    """
-    if not has_transform_with_state():
-        raise ImportError(
-            "transformWithStateInPandas needs google.protobuf; "
-            "use running_event_totals (applyInPandasWithState) instead"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _TotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._total = handle.getValueState("total", STATE_SCHEMA)
-
-        def handleInputRows(
-            self, key, rows, timerValues
-        ) -> Iterator[pd.DataFrame]:
-            prev = self._total.get()
-            batch_rows, total = _advance_totals(
-                prev[0] if prev is not None else 0, rows
-            )
-            self._total.update((total,))
-            yield _totals_frame(key, batch_rows, total)
-
-        def close(self) -> None:
-            pass
-
-    if isinstance(stream.schema[ts_col].dataType, TimestampNTZType):
-        stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            statefulProcessor=_TotalsProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )
 

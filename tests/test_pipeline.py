@@ -106,6 +106,55 @@ def test_publish_retry_then_succeed(spark, tmp_path):
     assert sum(consume_batch_counts(spool)) == 5
 
 
+def test_publish_partial_failure_resends_only_failed_entries(
+    spark, tmp_path
+):
+    """SendMessageBatch's Failed list names only the entries that
+    failed; the others were delivered. A retry must resend just the
+    failed ones, so every row lands exactly once and none is counted
+    twice or dead-lettered."""
+    spool = str(tmp_path / "spool")
+    dlq_spool = str(tmp_path / "dlq")
+    seen = str(tmp_path / "seen")
+
+    class FailsOneOnFirstAttempt:
+        """Each batch's first attempt drops its first entry (reported
+        in Failed) and delivers the rest."""
+
+        def __init__(self):
+            self.inner = DirectoryQueue(spool)
+
+        def send_message_batch(self, QueueUrl="", Entries=None):
+            import os as _os
+
+            # a batch's first attempt carries its first Id; a marker
+            # file per Id survives the per-partition client
+            marker = f"{seen}-{Entries[0]['Id']}"
+            if _os.path.exists(marker):
+                return self.inner.send_message_batch(QueueUrl, Entries)
+            open(marker, "w").close()
+            self.inner.send_message_batch(QueueUrl, Entries[1:])
+            return {
+                "Successful": [{"Id": e["Id"]} for e in Entries[1:]],
+                "Failed": [{"Id": Entries[0]["Id"], "SenderFault": False}],
+            }
+
+    orders = spark.read.parquet(table_path(SF, "orders")).limit(53)
+    rows = orders.count()
+    result = publish(
+        orders,
+        FailsOneOnFirstAttempt,
+        batch_size=10,
+        max_attempts=3,
+        dlq_client_factory=lambda: DirectoryQueue(dlq_spool),
+        retry_backoff_s=0.001,
+    )
+    assert result.published == rows
+    assert result.dead_lettered == 0
+    keys = [m["o_orderkey"] for m in read_messages(spool)]
+    assert sorted(keys) == sorted(r.o_orderkey for r in orders.collect())
+
+
 def test_publish_dead_letters_after_exhausted_retries(spark, tmp_path):
     """template.yaml:10-12 analog: after max_attempts the batch goes to
     the DLQ instead of failing the job."""

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from poc_parquet_publisher_spark import scale
 from poc_parquet_publisher_spark.catalog import load_table
+from poc_parquet_publisher_spark.pipeline.layout import write_partitioned
 
 SF = "/root/testdata/sf0.001"
 
@@ -97,7 +98,7 @@ def test_partition_pruning(spark, tmp_path):
     time: PartitionFilters set, and only the matching partition is read."""
     out = str(tmp_path / "events_by_type")
     events = load_table(spark, SF, "events")
-    scale.write_partitioned(events, out, ["event_type"])
+    write_partitioned(events, out, ["event_type"])
 
     df = spark.read.parquet(out).filter(F.col("event_type") == "click")
     plan = df._jdf.queryExecution().executedPlan().toString()

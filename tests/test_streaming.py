@@ -136,59 +136,6 @@ def test_stateful_running_totals(spark, events_dir, tmp_path):
         assert len(mine) >= 2  # state really crossed micro-batches
 
 
-def test_stateful_running_totals_tws(spark, events_dir, tmp_path):
-    """transformWithStateInPandas (Spark 4 successor API): same contract
-    as test_stateful_running_totals, the counting core shared via
-    _advance_totals. Skips (with the live probe's reason) until the
-    container gains google.protobuf -- the day it appears this test
-    activates and the API is covered with zero code changes."""
-    import pytest
-
-    from poc_parquet_publisher_spark.streaming.stateful import (
-        has_transform_with_state,
-        running_event_totals_tws,
-    )
-
-    if not has_transform_with_state():
-        pytest.skip(
-            "transformWithStateInPandas needs google.protobuf "
-            "(absent in this container; applyInPandasWithState carries "
-            "the stateful surface -- SURVEY.md section 2.3)"
-        )
-
-    src, batch_df = events_dir
-    ckpt = str(tmp_path / "ckpt")
-    stream = (
-        spark.readStream.schema(batch_df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        running_event_totals_tws(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("totals_tws_t")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-
-    out = spark.table("totals_tws_t")
-    expected = {
-        r.event_type: r.n
-        for r in batch_df.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    rows = out.collect()
-    assert {r.event_type for r in rows} == set(expected)
-    for key, n in expected.items():
-        mine = [r for r in rows if r.event_type == key]
-        assert max(r.running_total for r in mine) == n
-        assert sum(r.batch_rows for r in mine) == n
-
-
 def test_streaming_windows_match_batch(spark, events_dir, tmp_path):
     src, batch_df = events_dir
     ckpt = str(tmp_path / "ckpt")
